@@ -9,6 +9,13 @@ package graft
   * every setting reads `GRAFT_<KEY>` from the environment, then the
   * `graft.<key>` JVM system property, then the reference's documented
   * default.
+  *
+  * `shufflePartitions` sizes the session's shuffles. The streaming
+  * pipeline ([[LogAnalysisApp.start]]) gives a new checkpoint
+  * `min(shufflePartitions, defaultParallelism)` state partitions, so the
+  * default of 32 only reaches the state stores on a cluster with at
+  * least 32 cores. A checkpoint keeps the count it started with: a
+  * restart with a different setting or more cores does not change it.
   */
 final case class GraftConfig(
     kafkaBrokers: String,

@@ -4,23 +4,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import org.apache.spark.sql.graft.ColumnBridge
+
 import graft.streaming.{LogStream, UpsertSink}
 
 /** The product pipeline — the rebuild of the reference's
-  * `LogAnalysis.main` (`LogAnalysis.java:34-94`): one shared parsed
-  * stream feeding the three continuous analytics, each attached to a
+  * `LogAnalysis.main` (`LogAnalysis.java:34-94`): one parsed-stream
+  * definition feeding the three continuous analytics, each attached to a
   * PK-upsert sink.
   *
-  * Deliberate improvement over the reference (its B4 quirk): the
-  * reference launches three INDEPENDENT jobs, each re-consuming the
-  * Kafka topic (`LogAnalysis.java:131,187,258`). Here the parse happens
-  * once per micro-batch and the three sinks share it.
+  * Like the reference (its B4 quirk: three INDEPENDENT jobs, each
+  * re-consuming the Kafka topic, `LogAnalysis.java:131,187,258`), each
+  * query here is its own streaming query: the parse is defined once, but
+  * every query reads the source and parses every line itself.
   *
   * Top-N sinks run in COMPLETE mode (per-key aggregate state is small —
   * one row per section/article) and rank inside foreachBatch — Spark's
   * equivalent of Blink's streaming Top-N rewrite (SURVEY.md §2.1 Q4).
   */
 object LogAnalysisApp {
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val ListingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Runs `starts` over `lines` with the start-time confs set on `spark`,
+    * then restores the caller's values: each query snapshots the session
+    * conf at `start()`. A new checkpoint records its snapshot's
+    * `spark.sql.shuffle.partitions` as its state partition count, and
+    * here that is `min(spark.sql.shuffle.partitions, defaultParallelism)`;
+    * a restart restores the recorded count instead. In local mode the
+    * file source also lists each batch's files on the driver: with more
+    * files than the parallel-listing threshold, the listing is otherwise
+    * a Spark job with one task per file at every batch. The source reads
+    * that threshold live from its own session, so it gets a session clone
+    * (see `ColumnBridge.withSourceConfs`) rather than a start-time conf.
+    */
+  private def startQueries[T](spark: SparkSession, lines: DataFrame,
+      extra: (String, String)*)(starts: DataFrame => T): T = {
+    val sc = spark.sparkContext
+    val source =
+      if (sc.isLocal) ColumnBridge.withSourceConfs(lines, Map(ListingThreshold -> Int.MaxValue.toString))
+      else lines
+    val confs = (ShufflePartitions ->
+      math.min(spark.conf.get(ShufflePartitions).toInt, sc.defaultParallelism).toString) +: extra
+    val prior = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try starts(source)
+    finally confs.foreach { case (k, _) => prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 
   final case class Pipelines(
       hotSection: StreamingQuery,
@@ -36,17 +68,22 @@ object LogAnalysisApp {
     * static snapshots (broadcast per micro-batch — the lookup-join
     * analog). Sinks are in-memory upsert tables; swap the merge lambda
     * for graft.sources.JdbcUpsert#write against MySQL in production.
+    *
+    * The four queries run on the RocksDB state store (transformWithState,
+    * under the incremental top-N, requires it). A new checkpoint gets
+    * `min(spark.sql.shuffle.partitions, defaultParallelism)` state
+    * partitions: the state is small (one row per section, article or
+    * client) and every partition pays an open and a commit per batch.
+    * The count is fixed for the checkpoint's lifetime: a restart on more
+    * cores, or with a higher setting, keeps it. On a cluster,
+    * `defaultParallelism` counts the executor cores registered when the
+    * checkpoint's first batch starts. `spark`'s own confs are left as
+    * they were.
     */
   def start(spark: SparkSession, lines: DataFrame,
       sectionDim: DataFrame, articleDim: DataFrame,
-      checkpointRoot: String): Pipelines = {
-    // transformWithState (the incremental top-N below) requires the
-    // RocksDB state store; the aggregate sinks run on it too — the
-    // provider you'd run at scale anyway (changelog checkpointing,
-    // off-heap state). Set before any query start so every sink's
-    // snapshot of the conf agrees.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      checkpointRoot: String): Pipelines = startQueries(spark, lines,
+      StateStoreProvider -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { lines =>
     val parsed = LogStream.parsedTuples(lines)
 
     val sectionSink = new UpsertSink(Seq("section_id"))
@@ -87,7 +124,7 @@ object LogAnalysisApp {
       .foreachBatch { (df: DataFrame, id: Long) => clientSink.merge(df, id) }
       .start()
 
-    // Incremental Blink-parity top-N off the SAME shared parse: the
+    // Incremental Blink-parity top-N off the same parse definition: the
     // keyed rank operator (graft.streaming.TopNStream) instead of the
     // complete-mode sort — per-batch work is O(touched sections + k),
     // state never replays the whole aggregate table. Sink upserts by
@@ -115,9 +152,9 @@ object LogAnalysisApp {
       alarms: scala.collection.concurrent.TrieMap[Long, (Long, Option[Long], Boolean)],
       funnelSink: UpsertSink)
 
-  /** The extension sinks, attached to the SAME shared parse as the three
-    * product analytics (the multi-sink answer to the reference's B4
-    * three-independent-jobs topology — one parse, N consumers):
+  /** The extension sinks, two more streaming queries over the same parse
+    * definition as the three product analytics (each reads and parses
+    * every line itself, as each product query does):
     *
     *   - **volume alarm**: each micro-batch's row count robust-z'd
     *     against `refVolumes` (historical per-period volumes, an `x:
@@ -132,12 +169,14 @@ object LogAnalysisApp {
     *     join state stays O(rate × window) forever.
     *
     * Scale note: everything here is per-micro-batch narrow work plus one
-    * watermark-bounded join keyed on client_ip; no new scan of the
-    * source, no unbounded state.
+    * watermark-bounded join keyed on client_ip; no unbounded state. Both
+    * queries start as [[start]]'s do (state partitions sized to the cores,
+    * batch files listed on the driver in local mode) but keep the
+    * session's state-store provider.
     */
   def startMonitors(spark: SparkSession, lines: DataFrame,
       refVolumes: DataFrame, checkpointRoot: String,
-      maxGapSec: Int = 600, watermarkSec: Int = 300): Monitors = {
+      maxGapSec: Int = 600, watermarkSec: Int = 300): Monitors = startQueries(spark, lines) { lines =>
     val parsed = LogStream.parsedTuples(lines)
       .withColumn("ts", to_timestamp(col("access_date")))
 

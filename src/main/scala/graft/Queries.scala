@@ -13100,21 +13100,25 @@ object Queries {
     // tokenize-train-score chain this replaced (3 corpus passes gone).
     val counts = pcptCounts(spark, sfDir)
     // The three folds are independent driver loops (3 passes × 2 jobs
-    // each over the shared cached count table): submit them from a small
-    // thread pool so one fold's tiny stages back-fill the cores idled by
+    // each over the shared cached count table): submit them to a
+    // dedicated 3-thread pool, one thread per fold and shut down on every
+    // path, so one fold's tiny stages back-fill the cores idled by
     // another fold's driver barriers (guide §2.6 — actions are only
     // sequential because the driver calls them sequentially). Attribution
     // stays honest: training still runs eagerly inside this query's
     // timed region, and each fold's integer model is bit-identical to
     // the sequential run (per-fold jobs are themselves unchanged).
     val models = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fs = (0 to 2).map { k => Future {
-        graft.ops.Classify.perceptronTrainOnCounts(
-          counts.filter(col("doc_id") % 3 =!= k), 3)
-      } }
-      fs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val fs = (0 to 2).map { k => Future {
+          graft.ops.Classify.perceptronTrainOnCounts(
+            counts.filter(col("doc_id") % 3 =!= k), 3)
+        } }
+        fs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+      } finally pool.shutdown()
     }
     (0 to 2).map { k =>
       val (w, b) = models(k)

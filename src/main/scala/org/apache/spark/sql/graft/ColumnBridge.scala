@@ -48,4 +48,20 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** `df` with each v1 streaming source (the file source) bound to a
+    * clone of its session that has `confs` set. Such a source reads its
+    * own session's conf live, at every batch (the file source lists each
+    * batch's files through it), not the snapshot its query takes at
+    * `start()`; the clone keeps `confs` off the caller's session.
+    */
+  def withSourceConfs(df: org.apache.spark.sql.DataFrame,
+      confs: Map[String, String]): org.apache.spark.sql.DataFrame = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    confs.foreach { case (k, v) => session.conf.set(k, v) }
+    ofRows(df.sparkSession, df.queryExecution.analyzed.transform {
+      case r: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
+        r.copy(dataSource = r.dataSource.copy(sparkSession = session))
+    })
+  }
 }

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end product pipeline: files arriving in a directory → shared
@@ -116,6 +120,115 @@ class LogAnalysisAppSpec extends AnyFunSuite {
       p2.hotSection.stop(); p2.hotArticle.stop(); p2.clientIp.stop()
       p2.hotSectionIncr.stop()
     }
+  }
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val StartConfs = Seq(ShufflePartitions,
+    "spark.sql.sources.parallelPartitionDiscovery.threshold",
+    "spark.sql.streaming.stateStore.providerClass")
+
+  /** Runs `body` with `key` set on the session, then restores it. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Starts the pipeline over `logDir`, drains it, runs `check` and stops it. */
+  def drain[T](logDir: java.io.File, ckpt: String)(check: LogAnalysisApp.Pipelines => T): T = {
+    import spark.implicits._
+    val p = LogAnalysisApp.start(spark,
+      graft.sources.LogSources.textStreamLines(spark, logDir.toString),
+      Seq((3L, "tech"), (5L, "life")).toDF("fid", "name"),
+      Seq((9L, "post nine")).toDF("tid", "subject"), ckpt)
+    val queries = Seq(p.hotSection, p.hotArticle, p.clientIp, p.hotSectionIncr)
+    try {
+      queries.foreach(_.processAllAvailable())
+      check(p)
+    } finally queries.foreach(_.stop())
+  }
+
+  /** The state partitions a query's first stateful operator keeps. */
+  def statePartitions(ckpt: String, query: String): Int =
+    new java.io.File(ckpt, s"$query/state/0").listFiles()
+      .count(f => f.isDirectory && f.getName.forall(_.isDigit))
+
+  test("a fresh checkpoint gets one state partition per core, not spark.sql.shuffle.partitions") {
+    val cores = spark.sparkContext.defaultParallelism
+    val logDir = Files.createTempDirectory("graft-logs-sp").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-sp").toString
+    Files.writeString(new java.io.File(logDir, "b1.log").toPath,
+      line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"))
+    withConf(ShufflePartitions, (cores * 8).toString) {
+      drain(logDir, ckpt)(p => assert(p.sectionSink.snapshot(Seq(3L)).last == 1L))
+    }
+    assert(statePartitions(ckpt, "hot_section") == cores)
+  }
+
+  test("restart keeps the checkpoint's state partition count and does not double count") {
+    val logDir = Files.createTempDirectory("graft-logs-sp2").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-sp2").toString
+    Files.writeString(new java.io.File(logDir, "b1.log").toPath, Seq(
+      line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
+      line("10.0.0.2", "/forum.php?mod=forumdisplay&fid=3")).mkString("\n"))
+    withConf(ShufflePartitions, "2") {
+      drain(logDir, ckpt)(p => assert(p.sectionSink.snapshot(Seq(3L)).last == 2L))
+    }
+    assert(statePartitions(ckpt, "hot_section") == 2)
+
+    Files.writeString(new java.io.File(logDir, "b2.log").toPath,
+      line("10.0.0.3", "/forum.php?mod=forumdisplay&fid=3"))
+    withConf(ShufflePartitions, "32") {
+      drain(logDir, ckpt) { p =>
+        assert(p.sectionSink.snapshot(Seq(3L)).last == 3L)
+        assert(p.sectionTopSink.snapshot(Seq(1))(2) == 3L)
+      }
+    }
+    assert(statePartitions(ckpt, "hot_section") == 2)
+  }
+
+  test("start leaves the caller's start-time confs as they were") {
+    val logDir = Files.createTempDirectory("graft-logs-cf").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-cf").toString
+    Files.writeString(new java.io.File(logDir, "b1.log").toPath,
+      line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"))
+    def confs() = StartConfs.map(k => (spark.conf.getAll.get(k), spark.conf.getOption(k)))
+    withConf(ShufflePartitions, "16") {
+      val before = confs()
+      drain(logDir, ckpt)(_ => assert(confs() == before))
+      assert(confs() == before)
+    }
+  }
+
+  test("a batch of more files than the parallel-listing threshold runs no listing job") {
+    val logDir = Files.createTempDirectory("graft-logs-ls").toFile
+    val ckpt = Files.createTempDirectory("graft-ckpt-ls").toString
+    val files = 40
+    assert(files > spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    (0 until files).foreach { i =>
+      Files.writeString(new java.io.File(logDir, f"b$i%02d.log").toPath,
+        line(s"10.0.1.$i", "/forum.php?mod=forumdisplay&fid=3"))
+    }
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      drain(logDir, ckpt)(p => assert(p.sectionSink.snapshot(Seq(3L)).last == files.toLong))
+      // The listener bus delivers in order: once this job is seen, so are the pipeline's.
+      sc.setJobDescription("listing-spec marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!descriptions.contains("listing-spec marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(descriptions.contains("listing-spec marker"))
+      val listings = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
+      assert(listings.isEmpty, s"listing jobs ran: ${listings.mkString("; ")}")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("monitors: robust-z volume alarm + browse→read interval join off one shared parse") {
