@@ -19,20 +19,14 @@ import org.apache.spark.sql.functions._
   *     AND dead, i.e. a no-op).
   *   - B3 fixed: value equality for the failure sentinels.
   *
-  * Everything here is built-in expressions (regexp_extract / split /
-  * try_to_timestamp), so whole-stage codegen applies and the parse fuses
-  * with downstream filters into one stage — no shuffle, no UDF. On a real
-  * cluster this runs as a narrow map over the source partitions.
+  * The record parse is one native expression
+  * ([[graft.functions.ParseCombinedLog]]) and the rest are built-ins
+  * (regexp_extract / split / try_to_timestamp), so whole-stage codegen
+  * applies and the parse fuses with downstream filters into one stage —
+  * no shuffle, no UDF. On a real cluster this runs as a narrow map over
+  * the source partitions.
   */
 object LogParser {
-
-  /** Flat-group version of the reference regex (`LogParse.java:25-26`),
-    * anchored, group per field:
-    * 1 ip, 2 identity, 3 user, 4 datetime (no brackets), 5 request
-    * (no quotes), 6 status, 7 bytes, 8 referer, 9 user-agent.
-    */
-  val LogRegex: String =
-    """^(\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}) (\S+) (\S+) \[(.+?)\] "(.*?)" (\d{3}) (\S+) "(.*?)" "(.*?)"$"""
 
   /** Discuz URL id patterns (`LogParse.java:114,117`): anchored on the
     * exact `mod=` value so e.g. `?mod=ajax&...&fid=40` yields NO section.
@@ -50,8 +44,9 @@ object LogParser {
     * (the reference maps those to null records, `LogParse.java:50-56`).
     *
     * Uses the native one-pass [[graft.functions.ParseCombinedLog]]
-    * expression (one regex match per line; the composed-builtins
-    * alternative costs ~10 full matches and bloats codegen).
+    * expression (one byte scan per line against its `LogRegex`
+    * specification; the composed-builtins alternative costs ~10 full
+    * regex matches and bloats codegen).
     */
   def parseRecord(lines: DataFrame, lineCol: String = "line"): DataFrame = {
     val parsed = lines.withColumn("_rec", graft.functions.GraftFunctions.parse_log(col(lineCol)))

@@ -686,11 +686,16 @@ object Graph {
     // so the half-round's |E| aggregate reuses the partitioning with no
     // exchange (guide §2.3/2.4 — the coreness layout; two cached edge
     // copies is the standard co-partitioning trade, released below).
+    // Past the gate the score joins shuffle anyway, and with no round
+    // nothing reads the copies: both then use the plain edge list.
     val nV = nodes.count()
-    def bcV(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df
-    val eDst = edges.repartition(col("dst")).localCheckpoint(true)
-    val eSrc = edges.repartition(col("src")).localCheckpoint(true)
+    val bcScores = nV <= broadcastMaxRows
+    def bcV(df: DataFrame): DataFrame = if (bcScores) broadcast(df) else df
+    val copyEdges = bcScores && iters >= 1
+    def edgeCopy(key: String): DataFrame =
+      if (copyEdges) edges.repartition(col(key)).localCheckpoint(true) else edges
+    val eDst = edgeCopy("dst")
+    val eSrc = edgeCopy("src")
     def rescale(raw0: DataFrame, key: String, out: String): DataFrame = {
       // raw is referenced twice (round max + the rescale join): one
       // |V|-sized checkpoint keeps the |E|-join push aggregate behind it
@@ -735,8 +740,10 @@ object Graph {
       hubOwned = true
     }
     // the edge copies back nothing in the returned plan — release them
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(eDst)
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(eSrc)
+    if (copyEdges) {
+      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(eDst)
+      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(eSrc)
+    }
     // after the last half-round the node spine is no longer reachable
     // from the (checkpointed) hub/auth tables — release it, unless no
     // round ran and the lazy initial tables still read it
@@ -840,12 +847,18 @@ object Graph {
         val sizes = dist.groupBy(col("d")).agg(count(lit(1)).as("n"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val deepest = sizes.keys.max.toInt
-        if (deepest > maxDepth) {
+        // fail before any level is checkpointed: only the roots' frontier
+        // (and an owned und) exist to release
+        def reject(msg: String): Nothing = {
           org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(frontier)
           if (undOwned) und.unpersist()
-          throw new IllegalStateException(
-            s"brandesBetweenness: dist0 reaches depth $deepest > maxDepth $maxDepth")
+          throw new IllegalStateException(s"brandesBetweenness: $msg")
         }
+        if (deepest > maxDepth) reject(s"dist0 reaches depth $deepest > maxDepth $maxDepth")
+        val gaps = (1 to deepest).filterNot(k => sizes.contains(k.toLong))
+        if (gaps.nonEmpty) reject(
+          s"dist0 has no node at depth ${gaps.mkString(", ")} below its deepest $deepest; " +
+            "it must be the bfsDistancesPerSource table of these edges and sources")
         (1 to deepest).foreach { k =>
           val nxtSet = dist.filter(col("d") === k).select(col("root"), col("node"))
           // expand und through the SMALLER side: out-edges of the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -220,6 +221,54 @@ class GraphSpec extends AnyFunSuite {
     assert(got(3L) == (0L, 1000000L), got)
   }
 
+  /** The distinct persisted RDDs (local checkpoints, caches) that the
+    * jobs `body` runs on this thread read or write, with `body`'s result.
+    */
+  private def persistedRdds[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val group = s"graph-spec-${System.nanoTime()}"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile var done = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => e.stageInfos.flatMap(_.rddInfos)
+              .filter(_.storageLevel.isValid).foreach(r => ids.add(r.id))
+          case Some(g) if g == group + "-end" => done = true
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "persisted-rdd count")
+      val out = try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once this job is seen, so are body's
+      sc.setJobGroup(group + "-end", "persisted-rdd count marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done)
+      (ids.size, out)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("HITS: the co-partitioned edge copies are built only when scores broadcast and a round runs") {
+    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (1L, 3L, 1L), (4L, 2L, 5L)).toDF("src", "dst", "w")
+    def run(iters: Int, broadcastMaxRows: Long) = persistedRdds(
+      Graph.hits(edges, iters, broadcastMaxRows = broadcastMaxRows)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    val (copied, viaCopies) = run(1, 4000000L)
+    val (plain, viaShuffle) = run(1, 0L)
+    assert(viaShuffle == viaCopies)
+    // the node spine, then per half-round the raw push and its rescale;
+    // the broadcast path adds the dst- and src-partitioned edge copies
+    assert(plain == 5, plain)
+    assert(copied == plain + 2, (copied, plain))
+    val (none, initial) = run(0, 4000000L)
+    assert(none == 1, none) // no round: the node spine only
+    assert(initial == (1L to 4L).map(_ -> (1000000L, 0L)).toMap, initial)
+  }
+
   private def dists(edges: Seq[(Long, Long, Long)], from: Long): Map[Long, Long] = {
     import spark.implicits._
     Graph.sssp(edges.toDF("src", "dst", "w"), Seq(from).toDF("node"))
@@ -292,5 +341,21 @@ class GraphSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Graph.brandesBetweenness(e, r, maxDepth = 2, dist0 = Some(dist)).count()
     }
+  }
+
+  test("Brandes: dist0 with a missing depth errors loudly and releases what it checkpointed") {
+    val path = (1L to 6L).sliding(2).map(s => (s(0), s(1))).toSeq
+    val e = path.toDF("src", "dst")
+    val r = Seq(1L).toDF("node")
+    val gapped = Graph.bfsDistancesPerSource(e, r).filter(col("d") =!= 2).localCheckpoint(true)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalStateException] {
+      Graph.brandesBetweenness(e, r, dist0 = Some(gapped)).count()
+    }
+    assert(err.getMessage.contains("no node at depth 2"), err.getMessage)
+    // the roots' frontier, checkpointed before the check, is released
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, left)
+    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(gapped)
   }
 }

@@ -231,6 +231,25 @@ class LogAnalysisAppSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a second start over the same files, on a fresh checkpoint, compiles no generated class") {
+    val logDir = Files.createTempDirectory("graft-logs-cg").toFile
+    Files.writeString(new java.io.File(logDir, "b1.log").toPath, Seq(
+      line("10.0.0.1", "/forum.php?mod=forumdisplay&fid=3"),
+      line("10.0.0.2", "/forum.php?mod=viewthread&tid=9"),
+      "### not a log line ###").mkString("\n"))
+    def compiles(): Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(): Unit = drain(logDir, Files.createTempDirectory("graft-ckpt-cg").toString) { p =>
+      assert(p.sectionSink.snapshot(Seq(3L)).last == 1L)
+      assert(p.clientSink.snapshot.size == 2)
+    }
+    run()
+    val before = compiles()
+    run()
+    // each query runs on a clone of the session; with one class loader for
+    // every session the clones share Spark's generated-code cache
+    assert(compiles() == before, s"${compiles() - before} classes compiled on the second start")
+  }
+
   test("monitors: robust-z volume alarm + browse→read interval join off one shared parse") {
     import spark.implicits._
     val logDir = Files.createTempDirectory("graft-logs-m").toFile
